@@ -24,6 +24,9 @@ class BatchMetric:
     watermark: str | None
     state_rows: int | None
     state_bytes: int | None = None  # stateOperators memoryUsedBytes sum
+    # State-store instances per operator (max over operators): each one
+    # is opened and committed every micro-batch, a fixed per-batch cost.
+    state_stores: int | None = None
 
 
 @dataclass
@@ -114,6 +117,14 @@ class BookPipelineListener(StreamingQueryListener):
         state = p.get("stateOperators") or []
         state_rows = sum(s.get("numRowsTotal", 0) for s in state) if state else None
         state_bytes = sum(s.get("memoryUsedBytes", 0) for s in state) if state else None
+        state_stores = (
+            max(
+                s.get("numStateStoreInstances") or s.get("numShufflePartitions", 0)
+                for s in state
+            )
+            if state
+            else None
+        )
         name = p.get("name") or p.get("id", "?")
         batch_id = p.get("batchId", -1)
         self.collector.batches.append(
@@ -124,6 +135,7 @@ class BookPipelineListener(StreamingQueryListener):
                 watermark=(p.get("eventTime") or {}).get("watermark"),
                 state_rows=state_rows,
                 state_bytes=state_bytes,
+                state_stores=state_stores,
             )
         )
         over_rows = (

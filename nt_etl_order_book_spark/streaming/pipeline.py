@@ -23,6 +23,7 @@ by market_ticker for parallel consumption.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,6 +48,10 @@ BUFFER_TOPICS = ("orderbook-snapshots", "orderbook-deltas")
 # state (millions of rows) gets every core exactly as before — this
 # only trims the store count when the state is too small to feed them.
 STATE_ROWS_PER_PARTITION = 2500
+
+# Serializes deltas_query's conf-pin window (pin -> start() -> restore):
+# two library starts must not capture each other's pinned conf.
+_START_LOCK = threading.Lock()
 
 
 def stateful_shuffle_partitions(spark: SparkSession, expected_state_rows: int) -> int:
@@ -171,20 +176,37 @@ def deltas_query(
     ``stamp_ingest_ts``: as in snapshots_query — wall-clock stamp for
     rows whose source bypassed the durable buffer.
 
-    ``state_partitions`` (dedup runs only) right-sizes the stateful
-    stage: stateful operators take their shuffle-partition count — one
-    state-store instance each — from ``spark.sql.shuffle.partitions``
-    at query start (pinned into the checkpoint; AQE is disabled in
-    stateful workloads, so nothing coalesces tiny state stores the way
-    batch shuffles coalesce). Callers size it from the expected state
-    (stateful_shuffle_partitions, the DEPLOY.md §4 bound); None leaves
-    the session default untouched. The conf is set only around
-    ``start()`` — the stream captures its conf into a cloned session at
-    start, so the session value is restored before this returns
-    (verified stable across repeated runs in the r16 probe).
+    ``state_partitions`` sets the dedup stage's state-store count.
+    Stateful operators take their shuffle-partition count — one
+    state-store instance each, committed every micro-batch — from
+    ``spark.sql.shuffle.partitions`` at query start, and AQE is disabled
+    in stateful workloads, so nothing coalesces them later. ``None``
+    plans ``min(spark.sql.shuffle.partitions, defaultParallelism)``
+    stores: one per core, one task wave, never more than the session's
+    partitions (the ceiling stateful_shuffle_partitions returns at
+    production state sizes). Callers that know the expected state size
+    it explicitly (stateful_shuffle_partitions, the DEPLOY.md §4 bound).
+    A query resumed from an existing checkpoint keeps the store count
+    recorded there: Spark restores the partition count from the offset
+    log. Passing ``state_partitions`` when the dedup is not armed
+    (``dedup_within=None`` or no ``redis_stream_id`` column) raises.
+
+    The count is pinned by setting session conf around ``start()`` only
+    — the stream captures its conf into a cloned session at start, so
+    the session value is restored before this returns. Starts through
+    this function are serialized by a module lock; a foreign
+    ``writeStream.start()`` on the same session while ``deltas_query``
+    runs would capture the pinned conf and is unsupported.
     """
+    if state_partitions is not None and state_partitions < 1:
+        raise ValueError(f"state_partitions must be >= 1, got {state_partitions}")
     flat = flatten_deltas(msgs, stamp_ingest_ts=stamp_ingest_ts)
     dedup_armed = bool(dedup_within) and "redis_stream_id" in flat.columns
+    if state_partitions is not None and not dedup_armed:
+        raise ValueError(
+            "state_partitions sizes the dedup stage, which is not armed "
+            "(dedup_within is None or the stream has no redis_stream_id)"
+        )
     if dedup_armed:
         # NULL ids (sources without a buffer id) must bypass the dedup:
         # dropDuplicates* treats NULLs as equal and would keep exactly one
@@ -207,35 +229,39 @@ def deltas_query(
     if available_now:
         writer = writer.trigger(availableNow=True)
     spark = msgs.sparkSession
-    pinned: dict[str, tuple[str, str]] = {}  # key -> (query value, session value)
-    if dedup_armed and state_partitions is not None:
-        if state_partitions < 1:
-            raise ValueError(f"state_partitions must be >= 1, got {state_partitions}")
-        pinned["spark.sql.shuffle.partitions"] = (
-            str(state_partitions),
-            spark.conf.get("spark.sql.shuffle.partitions"),
-        )
-    if dedup_armed and available_now:
-        # An availableNow run is a drain-and-stop: after the last data
-        # batch the engine schedules one no-data batch purely to advance
-        # the watermark and evict state that the stop then discards.
-        # dropDuplicatesWithinWatermark emits rows immediately (never
-        # holds output for the watermark), so the sink's rows are
-        # IDENTICAL without that batch — skipping it removes a full
-        # per-store commit round (r16 A/B: ~1.4x at bench volume).
-        # Continuous (non-availableNow) runs keep no-data batches: there
-        # they are what evicts state across idle gaps.
-        pinned["spark.sql.streaming.noDataMicroBatches.enabled"] = (
-            "false",
-            spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true"),
-        )
-    for key, (qval, _) in pinned.items():
-        spark.conf.set(key, qval)
-    try:
-        return writer.start()
-    finally:
-        for key, (_, sval) in pinned.items():
-            spark.conf.set(key, sval)
+    with _START_LOCK:
+        pinned: dict[str, tuple[str, str]] = {}  # key -> (query value, session value)
+        if dedup_armed:
+            session_sp = spark.conf.get("spark.sql.shuffle.partitions")
+            if state_partitions is None:
+                state_partitions = min(int(session_sp), spark.sparkContext.defaultParallelism)
+            pinned["spark.sql.shuffle.partitions"] = (str(state_partitions), session_sp)
+            if available_now:
+                # An availableNow run is a drain-and-stop: after the last data
+                # batch the engine schedules one no-data batch purely to advance
+                # the watermark and evict expired state. dropDuplicatesWithinWatermark
+                # emits rows immediately (never holds output for the watermark),
+                # so the sink's rows are IDENTICAL without that batch — skipping
+                # it removes a full per-store commit round (r16 A/B: ~1.4x at
+                # bench volume). For a deployment that reuses the checkpoint
+                # across periodic drains the skipped eviction is deferred, not
+                # discarded: the next run's first batch evicts that state, and
+                # until then the retained ids still drop replays that a run
+                # with the no-data batch would have emitted (still within
+                # dropDuplicatesWithinWatermark's contract).
+                # Continuous (non-availableNow) runs keep no-data batches: there
+                # they are what evicts state across idle gaps.
+                pinned["spark.sql.streaming.noDataMicroBatches.enabled"] = (
+                    "false",
+                    spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true"),
+                )
+        for key, (qval, _) in pinned.items():
+            spark.conf.set(key, qval)
+        try:
+            return writer.start()
+        finally:
+            for key, (_, sval) in pinned.items():
+                spark.conf.set(key, sval)
 
 
 def enrich_with_market_dim(deltas: DataFrame, dim: DataFrame) -> DataFrame:

@@ -396,10 +396,27 @@ def test_stateful_shuffle_partitions_sizing(spark, monkeypatch):
         stateful_shuffle_partitions(spark, 1)
 
 
+def _planned_stores(q) -> set:
+    """State-store counts the query's stateful operators planned, over
+    every progress event it reported."""
+    return {
+        s.get("numShufflePartitions")
+        for p in q.recentProgress
+        for s in json.loads(p.json).get("stateOperators") or []
+    }
+
+
+def _default_stores(spark) -> int:
+    return min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
+
+
 def test_deltas_query_state_partitions_pinned_and_restored(spark, msg_dir, tmp_path):
     # The dedup stage must plan exactly the requested state-store count
     # (pinned at start) while the SESSION conf is untouched after the
-    # call — and the sink rows must be identical to the default-conf run.
+    # call — and the sink rows must not depend on the store count.
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     msgs = read_json_stream(spark, msg_dir)
@@ -412,24 +429,120 @@ def test_deltas_query_state_partitions_pinned_and_restored(spark, msg_dir, tmp_p
         spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true") == prev_nd
     )
     q.awaitTermination(60)
-    planned = {
-        s.get("numShufflePartitions")
-        for p in [json.loads(q.lastProgress.json)]
-        for s in p.get("stateOperators") or []
-    }
-    assert planned == {4}
-    # rows identical to the default-partitioning run
+    assert _planned_stores(q) == {4}
+    # rows identical to a run at a different explicit store count
     ref_q = deltas_query(
-        read_json_stream(spark, msg_dir), str(tmp_path / "ref_out"), str(tmp_path / "ref_cp")
+        read_json_stream(spark, msg_dir),
+        str(tmp_path / "ref_out"),
+        str(tmp_path / "ref_cp"),
+        state_partitions=2,
     )
     ref_q.awaitTermination(60)
+    assert _planned_stores(ref_q) == {2}
     got = sorted(map(tuple, spark.read.parquet(str(tmp_path / "sp_out")).collect()))
     ref = sorted(map(tuple, spark.read.parquet(str(tmp_path / "ref_out")).collect()))
     assert got == ref
-    with pytest.raises(ValueError):
-        deltas_query(
-            msgs, str(tmp_path / "bad_out"), str(tmp_path / "bad_cp"), state_partitions=0
-        )
+
+
+def test_deltas_query_default_plans_one_store_per_core(spark, msg_dir, tmp_path):
+    # No state_partitions: one store per core, capped at the session's
+    # shuffle partitions; the session conf is left as it was.
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    q = deltas_query(read_json_stream(spark, msg_dir), str(tmp_path / "out"), str(tmp_path / "cp"))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    q.awaitTermination(60)
+    assert _planned_stores(q) == {_default_stores(spark)}
+
+
+def test_deltas_query_rejects_invalid_or_unused_state_partitions(spark, msg_dir, tmp_path):
+    msgs = read_json_stream(spark, msg_dir)
+    cases = [("10 minutes", 0), (None, 0), (None, 2)]  # invalid; invalid and unused; unused
+    for i, (dedup_within, sp) in enumerate(cases):
+        with pytest.raises(ValueError, match="state_partitions"):
+            deltas_query(
+                msgs,
+                str(tmp_path / f"out{i}"),
+                str(tmp_path / f"cp{i}"),
+                dedup_within=dedup_within,
+                state_partitions=sp,
+            )
+    assert not any((tmp_path / f"cp{i}").exists() for i in range(len(cases)))
+
+
+def test_deltas_query_concurrent_starts_keep_their_own_store_count(spark, msg_dir, tmp_path):
+    # Two threads pin different store counts at once: each query must
+    # plan its own request, and the session conf must come back intact.
+    import threading
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    barrier = threading.Barrier(2)
+    queries: dict[int, object] = {}
+    errors: list[Exception] = []
+
+    def start(n: int) -> None:
+        try:
+            msgs = read_json_stream(spark, msg_dir)
+            barrier.wait(30)
+            queries[n] = deltas_query(
+                msgs, str(tmp_path / f"out{n}"), str(tmp_path / f"cp{n}"), state_partitions=n
+            )
+        except Exception as exc:  # surfaced below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=start, args=(n,)) for n in (2, 3)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+        assert not t.is_alive()
+    assert not errors, errors
+    for n, q in queries.items():
+        q.awaitTermination(60)
+        assert _planned_stores(q) == {n}
+    assert sorted(queries) == [2, 3]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def _delta_msg(sid: str, ts: int) -> str:
+    return json.dumps(
+        dict(DELTA, seq=ts, ts=ts, ingestion_ts=ts, redis_stream_id=sid, delta=ts % 7 - 3)
+    )
+
+
+def test_deltas_query_resume_keeps_checkpointed_store_count(spark, tmp_path):
+    # A checkpoint written at an explicit store count must resume at
+    # that count under the default (Spark restores the partition count
+    # from the offset log), keep dedup across the restart, and land
+    # exactly what one uninterrupted run lands.
+    src = tmp_path / "resume_msgs"
+    src.mkdir()
+    t = 1_700_000_000_000
+    (src / "part0.json").write_text(
+        "\n".join(_delta_msg(f"{t + i}-0", t + i) for i in (0, 1, 2, 0))
+    )
+    pinned = 2 * _default_stores(spark)  # differs from the default
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    first = deltas_query(read_json_stream(spark, str(src)), out, cp, state_partitions=pinned)
+    first.awaitTermination(60)
+    assert _planned_stores(first) == {pinned}
+    # second file replays ids from the first plus new ones
+    (src / "part1.json").write_text(
+        "\n".join(_delta_msg(f"{t + i}-0", t + i) for i in (1, 3, 2, 4, 3))
+    )
+    resumed = deltas_query(read_json_stream(spark, str(src)), out, cp)
+    resumed.awaitTermination(60)
+    assert resumed.exception() is None
+    assert _planned_stores(resumed) == {pinned}
+
+    ids = [r.redis_stream_id for r in spark.read.parquet(out).collect()]
+    assert sorted(ids) == sorted(set(ids)) == [f"{t + i}-0" for i in range(5)]
+    ref_q = deltas_query(
+        read_json_stream(spark, str(src)), str(tmp_path / "ref_out"), str(tmp_path / "ref_cp")
+    )
+    ref_q.awaitTermination(60)
+    got = sorted(map(tuple, spark.read.parquet(out).collect()))
+    ref = sorted(map(tuple, spark.read.parquet(str(tmp_path / "ref_out")).collect()))
+    assert got == ref
 
 
 # The 0-row bound below is ARMED ON PURPOSE to prove the alarm fires;
@@ -467,6 +580,8 @@ def test_streaming_metrics_listener(spark, msg_dir, tmp_path):
         peak_rows, peak_bytes = listener.collector.peak_state()
         assert peak_rows == max(b.state_rows or 0 for b in listener.collector.batches)
         assert peak_rows > 0 and peak_bytes > 0
+        # every stateful batch says which store count it ran at
+        assert {b.state_stores for b in listener.collector.batches} == {_default_stores(spark)}
         [qname] = {b.query_name for b in listener.collector.batches}
         assert listener.collector.peak_state(qname) == (peak_rows, peak_bytes)
         assert listener.collector.peak_state("no_such_query") == (0, 0)

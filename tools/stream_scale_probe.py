@@ -53,6 +53,15 @@ N_FILES = 32
 BASE_MSGS = 20_000
 
 
+def state_summary(batches) -> dict:
+    """Peak state rows/MiB and the state-store count a shape ran at."""
+    return {
+        "state_stores": max((b.state_stores or 0 for b in batches), default=0),
+        "peak_state_rows": max((b.state_rows or 0 for b in batches), default=0),
+        "peak_state_mib": round(max((b.state_bytes or 0 for b in batches), default=0) / (1 << 20), 2),
+    }
+
+
 def write_replay(msg_dir: str, n_msgs: int) -> None:
     os.makedirs(msg_dir)
     per_file = n_msgs // N_FILES
@@ -109,12 +118,7 @@ def run_shape(spark, msg_dir: str, n_msgs: int, trigger: int | None) -> dict:
         "n_batches": len(batches),
         "elapsed_sec": round(elapsed, 2),
         "msgs_per_sec": round(n_msgs / elapsed, 1),
-        "peak_state_rows": max((b.state_rows or 0) for b in batches) if batches else 0,
-        "peak_state_mib": round(
-            max((b.state_bytes or 0) for b in batches) / (1 << 20), 2
-        )
-        if batches
-        else 0.0,
+        **state_summary(batches),
     }
 
 
@@ -182,12 +186,7 @@ def run_dedup_docs(spark, msg_dir: str, n_msgs: int, horizon: str) -> dict:
         "n_batches": len(batches),
         "elapsed_sec": round(elapsed, 2),
         "msgs_per_sec": round(n_msgs / elapsed, 1),
-        "peak_state_rows": max((b.state_rows or 0) for b in batches) if batches else 0,
-        "peak_state_mib": round(
-            max((b.state_bytes or 0) for b in batches) / (1 << 20), 2
-        )
-        if batches
-        else 0.0,
+        **state_summary(batches),
     }
 
 
@@ -243,12 +242,7 @@ def run_heavy_hitters(spark, msg_dir: str, n_msgs: int, n_keys: int) -> dict:
         "n_batches": len(batches),
         "elapsed_sec": round(elapsed, 2),
         "msgs_per_sec": round(n_msgs / elapsed, 1),
-        "peak_state_rows": max((b.state_rows or 0) for b in batches) if batches else 0,
-        "peak_state_mib": round(
-            max((b.state_bytes or 0) for b in batches) / (1 << 20), 2
-        )
-        if batches
-        else 0.0,
+        **state_summary(batches),
     }
 
 
@@ -302,9 +296,9 @@ def main() -> int:
         rows = third_decade(spark)
         print(
             "| op | volume | horizon/keys | batches | wall s | msg/s "
-            "| peak state rows | peak state MiB |"
+            "| state stores | peak state rows | peak state MiB |"
         )
-        print("|---|---|---|---|---|---|---|---|")
+        print("|---|---|---|---|---|---|---|---|---|")
         for r in rows:
             bound = r.get("horizon") or (
                 f"{r['n_keys']} keys x K={r['mg_k']}" if "n_keys" in r else "-"
@@ -312,7 +306,7 @@ def main() -> int:
             print(
                 f"| {r.get('op', 'deltas_pipeline')} | {r['volume_msgs']:,} | {bound} | "
                 f"{r['n_batches']} | {r['elapsed_sec']} | {r['msgs_per_sec']:,} | "
-                f"{r['peak_state_rows']:,} | {r['peak_state_mib']} |"
+                f"{r['state_stores']} | {r['peak_state_rows']:,} | {r['peak_state_mib']} |"
             )
         print(json.dumps({"metric": "stream_third_decade", "rows": rows}))
         return 0
@@ -334,13 +328,16 @@ def main() -> int:
         finally:
             shutil.rmtree(msg_root, ignore_errors=True)
 
-    print("| volume | files/trigger | batches | wall s | msg/s | state rows | state MiB |")
-    print("|---|---|---|---|---|---|---|")
+    print(
+        "| volume | files/trigger | batches | wall s | msg/s "
+        "| state stores | state rows | state MiB |"
+    )
+    print("|---|---|---|---|---|---|---|---|")
     for r in rows:
         print(
             f"| {r['volume_msgs']:,} | {r['max_files_per_trigger']} | "
             f"{r['n_batches']} | {r['elapsed_sec']} | {r['msgs_per_sec']:,} | "
-            f"{r['peak_state_rows']:,} | {r['peak_state_mib']} |"
+            f"{r['state_stores']} | {r['peak_state_rows']:,} | {r['peak_state_mib']} |"
         )
     print(json.dumps({"metric": "stream_scale_probe", "rows": rows}))
     return 0
